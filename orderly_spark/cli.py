@@ -108,6 +108,7 @@ def _dump_config(args: argparse.Namespace, out_dir: str, name: str) -> None:
 
 
 def cmd_extract(args: argparse.Namespace) -> int:
+    from pyspark import StorageLevel
     from pyspark.sql import functions as F
 
     from orderly_spark.operators.extract import extract_reactions, molecule_name_side_output
@@ -150,16 +151,21 @@ def cmd_extract(args: argparse.Namespace) -> int:
     # (the broadcast-set J1 shape; extractor.py:546-593)
     smiles = SV.solvent_smiles_set(dim).collect()[0].solvent_set
     sset = F.array(*[F.lit(s) for s in smiles]) if smiles else None
-    extracted = extract_reactions(decoded, solvent_set=sset, trust_labelling=args.trust_labelling)
-    write_extracted(extracted, f"{args.output_path}/extracted_ords")
     if args.consider_molecule_names:
-        # the side output must see the DECODED (pre-filter) data: the
-        # extract transform strips exactly the numeric/empty names
-        # this list exists to record, so reading the written parquet
-        # back always produced an empty CSV (review finding; the
-        # pipeline test feeds decoded data, confirming the stage)
-        names = molecule_name_side_output(decoded)
-        save_name_list(names, f"{args.output_path}/molecule_names")
+        # two consumers (the extracted write and the name side output):
+        # keep the decoded rows so each file is decoded once
+        decoded = decoded.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        extracted = extract_reactions(decoded, solvent_set=sset, trust_labelling=args.trust_labelling)
+        write_extracted(extracted, f"{args.output_path}/extracted_ords")
+        if args.consider_molecule_names:
+            # the side output must see the DECODED (pre-filter) data:
+            # the extract transform strips exactly the numeric/empty
+            # names this list exists to record
+            names = molecule_name_side_output(decoded)
+            save_name_list(names, f"{args.output_path}/molecule_names")
+    finally:
+        decoded.unpersist()
     _dump_config(args, args.output_path, "extract_config.json")
     n = spark.read.parquet(f"{args.output_path}/extracted_ords").count()
     print(f"extracted {n} reactions -> {args.output_path}/extracted_ords")
@@ -236,19 +242,11 @@ def cmd_gen_fp(args: argparse.Namespace) -> int:
 
     spark = get_spark("orderly_spark.gen_fp")
     df = spark.read.parquet(args.clean_data_path)
-    fp = chem.morgan_fingerprint_udf(n_bits=args.fp_size, radius=args.radius)
-    # product_fp - reactant_fps, concat(diff, product) = 2*fp_size wide
-    # (fingerprints.py:59-74)
-    # subtract EVERY reactant's fingerprint (spec: product_fp - SUM of
-    # reactant fps, fingerprints.py:63-74) — hardcoding r0/r1 silently
-    # mis-fingerprinted rows with 3+ reactants (clean allows up to 5;
-    # review finding). Slot count defaults to the cap the CLEAN STAGE
-    # actually ran with, read from its clean_config.json lineage
-    # record (review finding r5: a fixed default of 5 silently dropped
-    # reactants beyond slot 5 whenever clean ran with --num-reactant
-    # > 5); an explicit --reactant-slots overrides. Out-of-range slots
-    # read as NULL → zero-vector fp → no-op in the difference, so an
-    # over-estimate only costs columns.
+    # product_fp - Σ reactant fps, concat(diff, product) = 2*fp_size
+    # wide (fingerprints.py:59-74). The slot count defaults to the cap
+    # the clean stage ran with, read from its clean_config.json lineage
+    # record; an explicit --reactant-slots overrides. Slots past a
+    # row's last reactant subtract nothing, so an over-estimate is free.
     explicit = args.reactant_slots is not None
     if explicit:
         slots = args.reactant_slots
@@ -274,18 +272,7 @@ def cmd_gen_fp(args: argparse.Namespace) -> int:
     df = df.observe(
         guard, F.count(F.when(F.size("reactants") > max_r, 1)).alias("n_over")
     )
-    r_cols = [f"__r{i}_fp" for i in range(max_r)]
-    out = df.withColumn("product_fp", fp(F.get(F.col("products"), 0)))
-    for i, rc in enumerate(r_cols):
-        out = out.withColumn(rc, fp(F.get(F.col("reactants"), i)))
-    out = (
-        out.withColumn(
-            "rxn_diff_fp",
-            chem.fingerprint_difference(F.col("product_fp"), *[F.col(rc) for rc in r_cols]),
-        )
-        .withColumn("rxn_fp", F.concat(F.col("rxn_diff_fp"), F.col("product_fp")))
-        .drop(*r_cols)
-    )
+    out = chem.reaction_fingerprints(df, n_bits=args.fp_size, radius=args.radius, slots=max_r)
     out.write.mode("overwrite").parquet(args.output_path)
     over = guard.get["n_over"]
     if over:

@@ -24,10 +24,14 @@ Reference behaviours mirrored:
 - fingerprints: orderly/gen_fp/fingerprints.py:76-99 (Morgan r=3,
   2048 bits, zeros on failure)
 
-Scale pattern (SURVEY §7.3.2): NEVER run the chem UDF once per fact
+Scale pattern (SURVEY §7.3.2): NEVER run the chem kernel once per fact
 row — molecule strings repeat heavily. ``canonicalise_via_dimension``
 distincts the molecule column, canonicalises the small distinct set,
 and broadcast-joins back: turns a UDF-per-row into a dimension build.
+The gen_fp row (:func:`reaction_fingerprints`) is one pandas UDF pass
+per row instead: a per-task memo keeps one numpy fingerprint per
+distinct molecule, and the row's product and difference fingerprints
+are built in Python and cross the Arrow boundary once.
 """
 
 from __future__ import annotations
@@ -272,33 +276,37 @@ def tm_first_order(arr: Column, tm_set: Column) -> Column:
     return F.concat(tm, rest)
 
 
+def _morgan_fp(smiles: str | None, n_bits: int, radius: int) -> list[int] | None:
+    """Per-molecule Morgan kernel shared by :func:`morgan_fingerprint_udf`
+    and :func:`reaction_fingerprints`: RDKit's hashed Morgan counts when
+    RDKit is present, else the pure-Python Morgan/ECFP over the parsed
+    SMILES graph (functions/smiles.py). ``None`` for NULL or unparseable
+    input; callers read that as the reference's all-zero fingerprint
+    (fingerprints.py:92-99)."""
+    if smiles is None:
+        return None
+    if HAVE_RDKIT:
+        from rdkit.Chem import AllChem  # type: ignore
+
+        mol = Chem.MolFromSmiles(smiles)
+        if mol is None:
+            return None
+        fp = AllChem.GetHashedMorganFingerprint(mol, radius, nBits=n_bits)
+        out = [0] * n_bits
+        for idx, v in fp.GetNonzeroElements().items():
+            out[idx] = int(v)
+        return out
+    from orderly_spark.functions.smiles import morgan_fingerprint
+
+    return morgan_fingerprint(smiles, radius=radius, n_bits=n_bits)
+
+
 def morgan_fingerprint_udf(n_bits: int = 2048, radius: int = 3):
-    """Morgan fingerprint pandas UDF factory → ArrayType(IntegerType).
-    Zeros on parse failure, matching the reference's contract
-    (fingerprints.py:92-99). Without RDKit the kernel is the REAL
-    pure-Python Morgan/ECFP over the parsed SMILES graph
-    (functions/smiles.py — r11, F14 partial-close); unparseable input
-    gets zeros in BOTH environments (the r10-era md5 pseudo-fingerprint
-    fallback is gone — the parser made it unnecessary)."""
-
-    def _fp_one(smiles: str) -> list[int]:
-        if smiles is None:
-            return [0] * n_bits
-        if HAVE_RDKIT:
-            from rdkit.Chem import AllChem  # type: ignore
-
-            mol = Chem.MolFromSmiles(smiles)
-            if mol is None:
-                return [0] * n_bits
-            fp = AllChem.GetHashedMorganFingerprint(mol, radius, nBits=n_bits)
-            out = [0] * n_bits
-            for idx, v in fp.GetNonzeroElements().items():
-                out[idx] = int(v)
-            return out
-        from orderly_spark.functions.smiles import morgan_fingerprint
-
-        fp = morgan_fingerprint(smiles, radius=radius, n_bits=n_bits)
-        return fp if fp is not None else [0] * n_bits
+    """Morgan fingerprint pandas UDF factory → ArrayType(IntegerType),
+    one molecule per row over the :func:`_morgan_fp` kernel. Zeros on
+    NULL or parse failure, matching the reference's contract
+    (fingerprints.py:92-99), in both the RDKit and the pure-Python
+    environment."""
 
     @F.pandas_udf(T.ArrayType(T.IntegerType()))
     def fp_udf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
@@ -306,12 +314,66 @@ def morgan_fingerprint_udf(n_bits: int = 2048, radius: int = 3):
         for s in it:
             def _memoized_fp(x):
                 if x not in memo:
-                    memo[x] = _fp_one(x)
+                    fp = _morgan_fp(x, n_bits, radius)
+                    memo[x] = fp if fp is not None else [0] * n_bits
                 return memo[x]
 
             yield s.map(_memoized_fp)
 
     return fp_udf
+
+
+def reaction_fingerprints(df: DataFrame, n_bits: int = 2048, radius: int = 3, slots: int = 5) -> DataFrame:
+    """The gen_fp step (fingerprints.py:59-99) as ONE Python pass per
+    row: ``df`` plus ``product_fp`` (Morgan fingerprint of
+    ``products[0]``), ``rxn_diff_fp`` (``product_fp`` minus the
+    fingerprints of the first ``slots`` members of ``reactants``) and
+    ``rxn_fp = concat(rxn_diff_fp, product_fp)``, 2·n_bits wide.
+
+    A single scalar-iterator pandas UDF reads ``products[0]`` and the
+    ``reactants`` array, looks each molecule up in a per-task memo of
+    int32 numpy fingerprints (built with :func:`_morgan_fp`, the kernel
+    of :func:`morgan_fingerprint_udf`) and returns the product and
+    difference fingerprints as one struct; only the concat runs in the
+    JVM. NULL and unparseable molecules count as zero vectors, so
+    NULL/empty ``products`` give an all-zero ``product_fp`` and NULL
+    reactants subtract nothing."""
+    import numpy as np
+
+    n_slots = max(slots, 0)
+
+    @F.pandas_udf("product_fp array<int>, rxn_diff_fp array<int>")
+    def fps_udf(it: Iterator[tuple[pd.Series, pd.Series]]) -> Iterator[pd.DataFrame]:
+        zeros = np.zeros(n_bits, dtype=np.int32)
+        memo: dict[str, np.ndarray] = {}
+
+        def fp(s):
+            if s is None:
+                return zeros
+            v = memo.get(s)
+            if v is None:
+                raw = _morgan_fp(s, n_bits, radius)
+                v = memo[s] = zeros if raw is None else np.asarray(raw, dtype=np.int32)
+            return v
+
+        for products, reactants in it:
+            prod = np.empty((len(products), n_bits), dtype=np.int32)
+            diff = np.empty_like(prod)
+            for i, (p, rs) in enumerate(zip(products, reactants)):
+                prod[i] = diff[i] = fp(p)
+                if rs is not None:
+                    for r in rs[:n_slots]:
+                        if r is not None:
+                            diff[i] -= fp(r)
+            yield pd.DataFrame({"product_fp": list(prod), "rxn_diff_fp": list(diff)})
+
+    return (
+        df.withColumn("__fps", fps_udf(F.get(F.col("products"), 0), F.col("reactants")))
+        .withColumn("product_fp", F.col("__fps.product_fp"))
+        .withColumn("rxn_diff_fp", F.col("__fps.rxn_diff_fp"))
+        .withColumn("rxn_fp", F.concat(F.col("rxn_diff_fp"), F.col("product_fp")))
+        .drop("__fps")
+    )
 
 
 def parsed_morgan_fp_udf(n_bits: int = 2048, radius: int = 3):
@@ -406,17 +468,16 @@ def fingerprint_difference(product_fp: Column, *reactant_fps: Column) -> Column:
 
 
 def reaction_fingerprint(product_fp: Column, reactant_fps: Column) -> Column:
-    """The gen_fp output row (fingerprints.py:59-74 / BASELINE spec):
-    ``concat(diff_fp, product_fp)`` → 2·n_bits wide, where diff_fp =
-    product_fp − Σ reactant_fps.
+    """The gen_fp output row (fingerprints.py:59-74 / BASELINE spec)
+    over fingerprint COLUMNS that already exist: ``concat(diff_fp,
+    product_fp)`` → 2·n_bits wide, where diff_fp = product_fp −
+    Σ reactant_fps (``product_fp``: array<int>; ``reactant_fps``: array
+    of fingerprint arrays), summed JVM-side with aggregate + zip_with.
 
-    Inputs are fingerprint COLUMNS (``product_fp``: array<int>;
-    ``reactant_fps``: array of fingerprint arrays) — compute them once
-    per distinct molecule with :func:`morgan_fingerprint_udf` over a
-    distinct set and broadcast-join back (a pandas UDF cannot run
-    inside a higher-order lambda, and per-row UDF calls are the
-    anti-pattern at scale anyway). The summation/difference here is
-    aggregate+zip_with, fully JVM-side."""
+    From SMILES, use :func:`reaction_fingerprints` (what ``gen-fp``
+    runs): it builds the product and difference fingerprints of a row
+    in one pandas UDF pass, so no fingerprint array is shipped per
+    reactant and no zip_with runs in the JVM."""
     zeros = F.transform(product_fp, lambda x: F.lit(0))
     # coalesce(v, zeros): a NULL MEMBER fingerprint contributes zeros
     # (review finding, r8: zip_with(acc, NULL) returned NULL and one

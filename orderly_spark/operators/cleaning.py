@@ -162,17 +162,23 @@ def normalize_sentinels(df: DataFrame, cols: Sequence[str]) -> DataFrame:
 # P11 — unresolved (non-SMILES) molecule names
 # ---------------------------------------------------------------------------
 
+def _ident(c: str) -> str:
+    """``c`` as a backtick-quoted SQL identifier for the ``F.expr``
+    builders below; an embedded backtick is doubled."""
+    return "`" + c.replace("`", "``") + "`"
+
+
 def _pack_row(cols: Sequence[str]) -> Column:
     """``struct(c1, c2, …)`` over every column, as ONE SQL-parsed
     expression (r16 — same py4j-round-trip rationale as :func:`_arr`;
     SQL struct names its fields by attribute exactly like F.struct)."""
-    return F.expr("struct(" + ", ".join(f"`{c}`" for c in cols) + ")")
+    return F.expr("struct(" + ", ".join(_ident(c) for c in cols) + ")")
 
 
 def _unpack_row(df: DataFrame, cols: Sequence[str]) -> DataFrame:
     """Inverse of :func:`_pack_row` on a ``__row`` column: one
     selectExpr call instead of len(cols) Column builds (r16)."""
-    return df.selectExpr(*[f"__row.`{c}` AS `{c}`" for c in cols])
+    return df.selectExpr(*[f"__row.{_ident(c)} AS {_ident(c)}" for c in cols])
 
 
 def _arr(c: str) -> Column:
@@ -184,7 +190,7 @@ def _arr(c: str) -> Column:
     # round trips (4,921/query build). F.expr ships the whole subtree
     # in one call and parses to the IDENTICAL expression (coalesce +
     # CAST(array() AS array<string>)); oracle parity re-proven.
-    return F.expr(f"coalesce(`{c}`, CAST(array() AS array<string>))")
+    return F.expr(f"coalesce({_ident(c)}, CAST(array() AS array<string>))")
 
 
 def handle_unresolved_names(df: DataFrame, names: DataFrame, cfg: CleanConfig) -> DataFrame:
@@ -702,7 +708,7 @@ def reaction_key(df: DataFrame, roles: Sequence[str], include_yields: bool = Fal
     # trips during plan construction; see _arr.
     parts = [
         F.expr(
-            f"concat_ws('.', transform(coalesce(`{r}`, CAST(array() AS array<string>)), "
+            f"concat_ws('.', transform(coalesce({_ident(r)}, CAST(array() AS array<string>)), "
             "x -> md5(coalesce(x, 'NULL'))))"
         )
         for r in roles
@@ -770,7 +776,7 @@ def scramble_role_lists(df: DataFrame, cfg: CleanConfig, roles: Sequence[str] = 
             r,
             F.expr(
                 "transform(array_sort(transform("
-                f"coalesce(`{r}`, CAST(array() AS array<string>)), "
+                f"coalesce({_ident(r)}, CAST(array() AS array<string>)), "
                 f"x -> struct(md5(concat_ws(':', '{cfg.seed}', "
                 "CAST(original_index AS string), x)) AS k, x AS v))), s -> s.v)"
             ),
@@ -789,7 +795,7 @@ def reaction_hash(df: DataFrame) -> Column:
     at 100 TB)."""
     # r16: one SQL-parsed expression (identical tree; see _arr)
     sort_roles = ", ".join(
-        f"array_sort(transform(coalesce(`{r}`, CAST(array() AS array<string>)), "
+        f"array_sort(transform(coalesce({_ident(r)}, CAST(array() AS array<string>)), "
         "x -> coalesce(x, 'NULL')))"
         for r in ("reactants", "products")
     )

@@ -190,11 +190,16 @@ class _state_sized_shuffle:
 
     def __enter__(self):
         _STATE_CONF_LOCK.acquire()
-        self._old = self._conf.get("spark.sql.shuffle.partitions")
-        self._conf.set(
-            "spark.sql.shuffle.partitions",
-            str(self._n if self._n else _stream_state_partitions()),
-        )
+        try:
+            self._old = self._conf.get("spark.sql.shuffle.partitions")
+            self._conf.set(
+                "spark.sql.shuffle.partitions",
+                str(self._n if self._n else _stream_state_partitions()),
+            )
+        except BaseException:
+            # __exit__ does not run when __enter__ raises
+            _STATE_CONF_LOCK.release()
+            raise
 
     def __exit__(self, *exc):
         try:

@@ -308,6 +308,30 @@ def test_reaction_key_member_boundaries_cannot_collide(spark):
     assert keys[1] != keys[2]
 
 
+def test_expr_helpers_quote_column_names_with_backticks(spark):
+    """The SQL-string expression builders quote column names; a name
+    holding a backtick must be escaped (doubled), not end the quote."""
+    name = "re`act"
+    df = spark.createDataFrame(
+        [(1, ["CC", None, "O"], ["p"])],
+        "original_index long, r array<string>, products array<string>",
+    ).withColumnRenamed("r", name)
+    plain = df.withColumnRenamed(name, "r")
+
+    packed = df.select(C._pack_row(df.columns).alias("__row"))
+    back = C._unpack_row(packed, df.columns)
+    assert back.columns == df.columns and back.collect() == df.collect()
+    assert df.select(C._arr(name).alias("a")).first().a == ["CC", None, "O"]
+
+    def key(frame, role):
+        return frame.select(C.reaction_key(frame, [role, "products"]).alias("k")).first().k
+
+    assert key(df, name) == key(plain, "r")
+    cfg = C.CleanConfig()
+    scrambled = C.scramble_role_lists(df, cfg, roles=[name]).first()[name]
+    assert scrambled == C.scramble_role_lists(plain, cfg, roles=["r"]).first()["r"]
+
+
 def test_merge_extracted_index_deterministic_with_duplicate_rxn(spark, tmp_path):
     """Review regression: rows sharing rxn_str within one file used to
     tie on the order key, leaving original_index to physical partition

@@ -174,3 +174,103 @@ def test_cli_extract_default_decoder_wire_protobuf(spark, tmp_path):
     # roles re-derived from the decoded rxn string; suffix stripped
     assert all(r.rxn_str == "CC.OO>N>CCO" for r in rows)
     assert sorted(r.yields[0] for r in rows) == [50.0, 51.0, 52.0, 53.0, 54.0, 55.0]
+
+
+def _per_slot_gen_fp(df, n_bits, radius, slots):
+    """The gen-fp result built the per-slot way: one Morgan UDF column
+    per slot, differenced by fingerprint_difference."""
+    from pyspark.sql import functions as F
+
+    from orderly_spark.functions import chem
+
+    fp = chem.morgan_fingerprint_udf(n_bits=n_bits, radius=radius)
+    r_cols = [f"__r{i}_fp" for i in range(slots)]
+    out = df.withColumn("product_fp", fp(F.get(F.col("products"), 0)))
+    for i, rc in enumerate(r_cols):
+        out = out.withColumn(rc, fp(F.get(F.col("reactants"), i)))
+    return (
+        out.withColumn(
+            "rxn_diff_fp",
+            chem.fingerprint_difference(F.col("product_fp"), *[F.col(rc) for rc in r_cols]),
+        )
+        .withColumn("rxn_fp", F.concat(F.col("rxn_diff_fp"), F.col("product_fp")))
+        .drop(*r_cols)
+    )
+
+
+def test_cli_genfp_matches_per_slot_fingerprints(spark, tmp_path, capsys):
+    """gen-fp's one-pass row UDF gives the same columns, types,
+    nullability and values as per-slot Morgan UDFs differenced in the
+    JVM, on the edge rows: NULL/empty products, NULL reactants and a
+    NULL member, an unparseable name, a duplicated reactant, exactly
+    ``slots`` reactants and more than ``slots`` under an explicit
+    --reactant-slots."""
+    from orderly_spark.functions import chem
+
+    slots, n_bits, radius = 3, 64, 2
+    df = spark.createDataFrame(
+        [
+            (0, None, ["CC", "O"]),
+            (1, [], ["CC"]),
+            (2, ["CCO"], None),
+            (3, ["CCO"], ["CC", None, "O"]),
+            (4, ["CCO"], ["sodium chloride", "O"]),
+            (5, ["c1ccccc1O"], ["CC", "CC"]),
+            (6, ["CCN"], ["C", "CC", "CCC"]),
+            (7, ["CCN"], ["C", "CC", "CCC", "CCCC", "N"]),
+            (8, [None, "CC"], []),
+        ],
+        "original_index long, products array<string>, reactants array<string>",
+    )
+    old = _per_slot_gen_fp(df, n_bits, radius, slots)
+    new = chem.reaction_fingerprints(df, n_bits=n_bits, radius=radius, slots=slots)
+    assert new.schema == old.schema
+    assert new.orderBy("original_index").collect() == old.orderBy("original_index").collect()
+
+    src, out, ref = (str(tmp_path / n) for n in ("train.parquet", "fp.parquet", "ref.parquet"))
+    df.write.parquet(src)
+    old.write.parquet(ref)
+    rc = main(["gen-fp", "--clean-data-path", src, "--output-path", out,
+               "--fp-size", str(n_bits), "--radius", str(radius), "--reactant-slots", str(slots)])
+    assert rc == 0
+    assert "1 rows have more than 3 reactants" in capsys.readouterr().err
+    got, want = spark.read.parquet(out), spark.read.parquet(ref)
+    assert got.schema == want.schema
+    assert got.orderBy("original_index").collect() == want.orderBy("original_index").collect()
+
+
+def test_cli_extract_decodes_each_file_once(spark, tmp_path, monkeypatch):
+    """extract writes the reactions and the molecule-name side output
+    from one decode: the decoder runs once per file, not once per
+    consumer."""
+    from orderly_spark.sources import ord_wire as W
+
+    data = tmp_path / "data"
+    for d in range(2):
+        (data / f"d{d}").mkdir(parents=True)
+        for f in range(2):
+            rxns = [
+                W.encode_reaction(
+                    cxsmiles=f"CC.OO>N>CCO |{d}{f}{i}|",
+                    is_mapped=False,
+                    inputs=[("m", [W.encode_compound([(2, "CC.OO")], 1)])],
+                    products=[("CCO", 50.0 + i)],
+                )
+                for i in range(3)
+            ]
+            (data / f"d{d}" / f"f{f}.pb.gz").write_bytes(W.dataset_pb_gz(rxns))
+    calls = tmp_path / "calls"
+    calls.mkdir()
+
+    def counting_decoder(filename, content, _calls=str(calls), _decode=O.proto_decoder):
+        import os
+        import uuid
+
+        open(os.path.join(_calls, uuid.uuid4().hex), "w").close()
+        return _decode(filename, content)
+
+    monkeypatch.setattr(O, "proto_decoder", counting_decoder)
+    out = str(tmp_path / "extracted")
+    assert main(["extract", "--data-path", str(data), "--output-path", out]) == 0
+    assert spark.read.parquet(f"{out}/extracted_ords").count() == 12
+    assert len(list(calls.iterdir())) == 4

@@ -887,3 +887,35 @@ def test_incremental_index_tail_join_broadcasts(spark, sf_smoke):
     must hold."""
     a = plan(spark, sf_smoke, "d_incremental_index_dedup")
     assert a.n_sortmerge_joins == 0, a.text
+
+
+def test_gen_fp_is_one_python_pass(spark, tmp_path, monkeypatch):
+    """gen-fp fingerprints each row in ONE ArrowEvalPython node and
+    leaves no zip_with in the JVM: per-slot Morgan UDFs chained 1 +
+    slots Python nodes per task and shipped a full fingerprint per
+    slot back through Arrow."""
+    import re
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from orderly_spark.cli import main
+
+    src = str(tmp_path / "train.parquet")
+    spark.createDataFrame(
+        [(0, ["CCO"], ["CC", "O"])],
+        "original_index long, products array<string>, reactants array<string>",
+    ).write.parquet(src)
+    plans = []
+    orig = DataFrameWriter.parquet
+
+    def spy(self, path, *args, **kwargs):
+        plans.append(audit(self._df).text)
+        return orig(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    rc = main(["gen-fp", "--clean-data-path", src, "--output-path", str(tmp_path / "fp"),
+               "--fp-size", "32", "--reactant-slots", "5"])
+    assert rc == 0 and len(plans) == 1
+    text = plans[0]
+    assert len(re.findall(r"^\(\d+\) ArrowEvalPython\b", text, re.M)) == 1, text
+    assert "zip_with" not in text, text

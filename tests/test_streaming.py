@@ -345,6 +345,48 @@ def test_latest_state_argmax_total_order_on_conflicting_writes(spark):
     assert got[8] == ("signup", 0.0)
 
 
+@pytest.mark.parametrize("fail_on", ["get", "set"])
+def test_state_conf_lock_released_when_enter_raises(fail_on):
+    """A conf error inside ``_state_sized_shuffle.__enter__`` must
+    release the module lock (``__exit__`` never runs when
+    ``__enter__`` raises), or the next stream drain deadlocks."""
+
+    class Conf:
+        def __init__(self, broken):
+            self.broken = broken
+            self.values = {"spark.sql.shuffle.partitions": "8"}
+
+        def get(self, key):
+            if self.broken == "get":
+                raise RuntimeError("conf get failed")
+            return self.values[key]
+
+        def set(self, key, value):
+            if self.broken == "set":
+                raise RuntimeError("conf set failed")
+            self.values[key] = value
+
+    class Session:
+        def __init__(self, broken):
+            self.conf = Conf(broken)
+
+    def lock_leaked():
+        leaked = not SP._STATE_CONF_LOCK.acquire(timeout=5)
+        # also frees a leaked lock, so later drains fail here, not hang
+        SP._STATE_CONF_LOCK.release()
+        return leaked
+
+    assert not lock_leaked()
+    with pytest.raises(RuntimeError):
+        with SP._state_sized_shuffle(Session(fail_on), 3):
+            pass
+    assert not lock_leaked(), "lock still held after a failed __enter__"
+    ok = Session(None)
+    with SP._state_sized_shuffle(ok, 3):
+        assert ok.conf.values["spark.sql.shuffle.partitions"] == "3"
+    assert ok.conf.values["spark.sql.shuffle.partitions"] == "8"
+
+
 def test_stream_state_partitions_set_and_restored(spark, events_dir):
     """r15 (optimization round): streams started by run_to_memory run
     with the parameterised state-store partition count
