@@ -553,13 +553,11 @@ def map_rare_molecules_to_other(df: DataFrame, counts: DataFrame, min_freq: int,
     a broadcast MAP is not an option (ArrayBasedMapData element_at is
     a linear key scan).
 
-    MEASURED CEILING (r10, tools/round10_scale_probe.py P3 — this
-    REVERSES the guidance an earlier version of this docstring gave):
-    the real cost is not execution (0.29 s at sf0.1) or Catalyst
-    (0.42 s) but PY4J EXPRESSION CONSTRUCTION — ``x.isin(freq_list)``
-    ships each literal through a py4j call, ~2 ms per entry per role
-    column, measured 29 s at |frequent| = 13 k × 4 roles vs the join
-    twin's flat 0.4 s. Crossover vs
+    MEASURED CEILING (SURVEY.md §16): the real cost is not execution
+    (0.29 s at sf0.1) or Catalyst (0.42 s) but PY4J EXPRESSION
+    CONSTRUCTION — ``x.isin(freq_list)`` ships each literal through a
+    py4j call, ~2 ms per entry per role column, measured 29 s at
+    |frequent| = 13 k × 4 roles vs the join twin's flat 0.4 s. Crossover vs
     :func:`map_rare_molecules_to_other_join` is only ~O(100) frequent
     entries; prefer THIS variant only for small frequent sets or when
     no row id exists for the join rebuild. The clean pipeline routes
@@ -733,13 +731,10 @@ def dedup_reactions(df: DataFrame, cfg: CleanConfig, include_yields: bool = Fals
     cleaner.py:483)."""
     key = reaction_key(df, cfg.dedup_subset_roles, include_yields)
     order = F.md5(F.concat_ws(":", F.lit(str(cfg.seed)), F.col("original_index").cast("string")))
-    # r16 (optimization round 2, guide §2.3/§8 re-measured at 10×):
-    # back to the row_number-window shape. r15 switched to a min_by
-    # argmin for its map-side partial aggregation, A/B'd a wash at
-    # sf0.1 — but at sf0.1 BOTH shapes are driver/overhead-bound. The
-    # r16 10×-sf0.1 scaling probe (tools/round16_scale_probe.py) is
-    # compute-bound and separates them: the min_by full-row struct
-    # buffer is not hash-mutable, so it plans as SortAggregate —
+    # A row_number window, not a min_by argmin. At sf0.1 both shapes
+    # are driver/overhead-bound and tie; the compute-bound 10×-sf0.1
+    # corpus separates them (OPTIMIZATION_r16.md): the min_by full-row
+    # struct buffer is not hash-mutable, so it plans as SortAggregate —
     # sorting the full-width rows TWICE (partial + final) around the
     # key exchange — while the window sorts them once after it
     # (min_by 10.3 s vs window 7.0 s for the same upstream at 10×,
@@ -853,23 +848,15 @@ def train_test_split(df: DataFrame, cfg: CleanConfig) -> tuple[DataFrame, DataFr
 # the full pipeline
 # ---------------------------------------------------------------------------
 
-#: see clean_pipeline's rare stage — module-level so A/B probes can
-#: toggle it inside one session; the shipped default is measured
-_RARE_STAGE_BARRIER = True
 
-
-def clean_pipeline(
-    df: DataFrame,
-    molecule_names: DataFrame,
-    cfg: CleanConfig,
-    persist_intermediate: bool = False,
-) -> DataFrame:
+def clean_pipeline(df: DataFrame, molecule_names: DataFrame, cfg: CleanConfig) -> DataFrame:
     """The fixed stage order of cleaner._get_dataframe
     (cleaner.py:533-882), minus the merge (see merge_extracted) and
     the export pivot (schema.array_to_wide).
 
-    SIDE EFFECT / DEPLOYMENT NOTE (r16, ADVICE r15): with the default
-    rare-stage barrier this function EAGERLY runs a Spark job (the
+    SIDE EFFECT / DEPLOYMENT NOTE: when the rare stage dedups first
+    (min_frequency_of_occurrence != 0 and drop_duplicates), this
+    function EAGERLY runs a Spark job (the
     ``localCheckpoint`` of the deduped relation) during construction,
     and the materialised blocks live on executor-local storage — not
     recoverable on executor loss. Correct in local mode and on static
@@ -895,41 +882,24 @@ def clean_pipeline(
         if cfg.drop_duplicates:
             out = dedup_reactions(out, cfg, include_yields=cfg.consistent_yield)
             dedup1_ran = True
-            if _RARE_STAGE_BARRIER:
-                # r15 (optimization round, guide §3.3/§5): the rare
-                # stage fans the deduped relation into THREE consumers
-                # (value-counts explode, offender-members explode, the
-                # main anti-join probe side). The runtime plan showed
-                # the scaffold scan + dedup aggregation executed once
-                # PER consumer — AQE's stage cache never matched the
-                # three subtrees (3 scans / 8 exchanges / 0 reuse at
-                # sf0.1). One localCheckpoint bounds the upstream to a
-                # single execution; the materialised relation is the
-                # deduped row set — the same bytes the three consumers
-                # each rebuilt.
-                out = out.localCheckpoint()
-        if persist_intermediate:
-            # OFF by default: the rare stage's three consumers (counts
-            # explode, members explode, main anti-join) share the dedup
-            # window's exchange subtree, which Catalyst's ReuseExchange
-            # computes ONCE within the final plan — a persist here paid
-            # the materialisation cost twice and, left unpersisted,
-            # squeezed executor memory for every later query in the
-            # session (measured: +142% on the query that followed).
-            # At 100 TB, if a real barrier is wanted, write the
-            # intermediate to a table and reread it — caller-owned,
-            # explicit lifecycle.
-            from pyspark.storagelevel import StorageLevel
-
-            out = out.persist(StorageLevel.MEMORY_AND_DISK)
+            # The rare stage fans the deduped relation into THREE
+            # consumers (value-counts explode, offender-members explode,
+            # the main anti-join probe side), and AQE's stage cache does
+            # not match the three subtrees: without a barrier the
+            # scaffold scan + dedup aggregation executes once PER
+            # consumer (3 scans / 8 exchanges / 0 reuse at sf0.1). One
+            # localCheckpoint bounds the upstream to a single execution;
+            # the materialised relation is the deduped row set — the
+            # same bytes the three consumers would each rebuild.
+            out = out.localCheckpoint()
         counts = condition_value_counts(out)
         if cfg.map_rare_molecules_to_other:
-            # strategy routing (r10, probe P3): the literal variant
-            # costs ~2 ms of py4j expression construction per frequent
-            # entry per role (29 s at 13 k entries), the join variant
-            # is flat (~0.4 s) — route on the frequent-set size. The
-            # probe count moves at most _RARE_LITERAL_MAX + 1 rows to
-            # the driver, so the decision itself is scale-safe.
+            # strategy routing: the literal variant costs ~2 ms of py4j
+            # expression construction per frequent entry per role (29 s
+            # at 13 k entries), the join variant is flat (~0.4 s) —
+            # route on the frequent-set size. The probe count moves at
+            # most _RARE_LITERAL_MAX + 1 rows to the driver, so the
+            # decision itself is scale-safe.
             k = cfg.min_frequency_of_occurrence
             n_freq = (
                 counts.filter(F.col("count") >= k).limit(_RARE_LITERAL_MAX + 1).count()

@@ -249,7 +249,7 @@ def prefix_filter_jaccard_pairs(
     (id) window for per-doc rank, the prefix self-equi-join, and a
     per-doc set join for verification. No cross join anywhere.
 
-    WHEN to use which exact plan (measured, tools/round6_scale_probe):
+    WHEN to use which exact plan (measured; SURVEY.md §12):
     the win is the df-SKEW crossover, not universal. On a corpus where
     every doc shares boilerplate (headers/footers/licenses — the web
     shape), the exhaustive join's Σ df² goes quadratic in corpus size

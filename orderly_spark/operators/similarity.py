@@ -156,7 +156,7 @@ def cosine_topk_arrow(
     fold's 17.2 s — 13×. Batch size matters as much as the kernel:
     the same run over ~60-row partitions was SLOWER than the fold
     (55 s) because per-batch Python/Arrow overhead swamped the
-    matmul; see tools/ann_scale_probe.py."""
+    matmul (SURVEY.md §10)."""
     import numpy as np
     import pandas as pd
 
@@ -344,8 +344,8 @@ def ivf_cosine_topk(
     pruning on `cell`), and the candidate join is an equi-join on a
     tiny key. Pass ``cell_col`` when the corpus already carries its
     assignment (the deployment shape: assign once at ingest, amortise
-    over every query batch — tools/ann_scale_probe.py measures the
-    difference); otherwise cells are computed inline. Deterministic
+    over every query batch — SURVEY.md §10 records the difference);
+    otherwise cells are computed inline. Deterministic
     end to end (pseudo-centroids, first-max ties), so the DuckDB
     oracle checks exact values."""
     embeddings = embeddings.filter(_usable_vec(F.col(vec_col)))
@@ -416,8 +416,7 @@ def semantic_dedup_stats(
     The quadratic pairwise term is confined within cells — k cells cut
     pair volume by ~k, the SemDeDup design point; raise k (k-means-
     trained centroids via operators/clustering.kmeans_fit) for sharper
-    balls with the SAME plan shape (measured in
-    tools/round6_scale_probe.py probe C)."""
+    balls with the SAME plan shape."""
     cells = embeddings.filter(_usable_vec(F.col(vec_col))).select(
         F.col(id_col).alias("vec_id"),
         F.col(vec_col).alias("ev"),

@@ -315,7 +315,7 @@ def j_pareto_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     unpartitioned ordering is metadata-scale, the same boundedness
     class as the compaction plan's per-hour window. At 100 TB the
     frontier input is |suppliers| rows, never |lineitem|. Honest
-    crossover (tools/round7_scale_probe.py): at 20 k points the
+    crossover (SURVEY.md §13): at 20 k points the
     quadratic dominance join is still broadcast-cheap (0.9× — sweep
     does NOT win yet); the sweep is the plan that survives when the
     point set outgrows a broadcast (its cost stays n log n while the

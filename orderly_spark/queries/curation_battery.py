@@ -543,10 +543,11 @@ def t_training_prep_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokens) + repetition gate (dup-token ratio ≤ 0.6) → exact dedup
     (min-doc_id survivor per normalised-text hash) → benchmark
     decontamination (drop any train doc sharing a 5-gram with the
-    doc_id ≥ 450 eval tail) → per-source stratified sampling
-    (hash-threshold) → 64/48 sliding-window chunking → per-source
-    chunk statistics. Every stage is value-exact, so the whole
-    composition sits under one DuckDB oracle.
+    eval set, doc_id % _EVAL_MOD == _EVAL_RES) → per-source
+    stratified sampling (hash-threshold) → 64/48 sliding-window
+    chunking → per-source chunk statistics. Every stage is
+    value-exact, so the whole composition sits under one DuckDB
+    oracle.
 
     Scale shape (r12 accounting fix — the r11 wording over-claimed):
     documents cross exactly TWO exchanges end to end. (1) the fan_out

@@ -951,7 +951,7 @@ def j_interval_overlap_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate pushdown note: the event_type filters reach the scan
     (PushedFilters), so each session build reads one type's rows.
 
-    HONEST probe results (tools/round8_scale_probe.py, sf0.1,
+    HONEST probe results (SURVEY.md §14, sf0.1,
     equality-asserted): at THIS query's per-user grain the plain
     user_id equi-join + inequality filter is faster (grid 0.16× —
     ~8 sessions/user makes per-key quadratic trivial); at coarse keys

@@ -366,9 +366,7 @@ def corpus_curation_stats(d: DataFrame) -> DataFrame:
     exact dedup (min-doc_id survivor per normalised-text hash) →
     MinHash-LSH near dups resolved to clusters (iterative min-label
     propagation) with only cluster survivors kept → per-source corpus
-    stats. Shared by the gated query below and
-    tools/curation_scale_probe.py, so the probe always measures the
-    shipped pipeline."""
+    stats, behind the gated query below."""
     from pyspark.sql import Window
 
     from orderly_spark.operators import dedup as D

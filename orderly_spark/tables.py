@@ -6,6 +6,8 @@ documents embeddings — one parquet each under a scale-factor dir.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -22,18 +24,18 @@ TABLES = (
     "embeddings",
 )
 
-#: (sf_dir, table) → inferred StructType. r16 (optimization round 2,
-#: guide §1.2 driver-side work): every `spark.read.parquet(path)` call
-#: re-lists the path and re-reads parquet footers to infer the schema —
-#: ~100 ms of driver latency per call, measured 0.6 s of q5's 0.8 s
-#: plan-construction time (6 tables) and a tax on EVERY slot. The
-#: schema of a given (dir, table) is immutable for the life of the
-#: process (testdata and the derived probe corpora are write-once), so
-#: it is inferred once and passed explicitly afterwards (~20 ms/call).
-#: Only the SCHEMA is cached — each call still returns a fresh
-#: DataFrame/scan (no shared plan objects, no self-join aliasing
-#: hazards, and certainly no result caching: every action re-reads
-#: parquet exactly as before).
+#: parquet path → (mtime stamp, inferred StructType). Every
+#: `spark.read.parquet(path)` call re-lists the path and re-reads parquet
+#: footers to infer the schema — ~100 ms of driver latency per call
+#: (0.6 s of q5's 0.8 s plan construction, 6 tables) and a tax on EVERY
+#: slot — so the schema is inferred once and passed explicitly
+#: afterwards (~20 ms/call). A table can be rewritten while the process
+#: lives (a corpus regenerated in a long-lived session), so a local
+#: path's entry is valid only while its ``st_mtime_ns`` is unchanged;
+#: paths ``os.stat`` cannot see (remote filesystems) are assumed
+#: write-once. Only the SCHEMA is cached — each call still returns a
+#: fresh DataFrame/scan (no shared plan objects, no self-join aliasing
+#: hazards, and no result caching: every action re-reads parquet).
 _SCHEMA_CACHE: dict = {}
 
 
@@ -59,13 +61,17 @@ def load(spark: SparkSession, sf_dir: str, name: str, *, fan_out: bool = False) 
         # driver's) won't have it — set it here so any session works.
         if (spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") or "false").lower() != "true":
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    _k = (sf_dir, name)
-    _schema = _SCHEMA_CACHE.get(_k)
-    if _schema is None:
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        _SCHEMA_CACHE[_k] = df.schema
+    path = f"{sf_dir}/{name}.parquet"
+    try:
+        stamp = os.stat(path).st_mtime_ns
+    except OSError:
+        stamp = None
+    cached = _SCHEMA_CACHE.get(path)
+    if cached is None or cached[0] != stamp:
+        df = spark.read.parquet(path)
+        _SCHEMA_CACHE[path] = (stamp, df.schema)
     else:
-        df = spark.read.schema(_schema).parquet(f"{sf_dir}/{name}.parquet")
+        df = spark.read.schema(cached[1]).parquet(path)
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         # TIMESTAMP(NANOS) parquet read as long via nanosAsLong —
         # convert back to a real (microsecond) timestamp.

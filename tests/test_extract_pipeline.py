@@ -100,7 +100,7 @@ def test_extract_then_clean_then_split(spark, ord_root):
         scramble=False,
     )
     names = spark.createDataFrame([("junk",)], "name string")
-    cleaned = C.clean_pipeline(with_idx, names, cfg, persist_intermediate=False)
+    cleaned = C.clean_pipeline(with_idx, names, cfg)
     n = cleaned.count()
     assert n >= 1
     train, test = C.train_test_split(cleaned, cfg)

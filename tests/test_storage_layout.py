@@ -332,3 +332,19 @@ def test_runtime_bloom_filter_prunes_fact_side(spark, sf_smoke):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+def test_load_sees_table_rewritten_in_place(spark, tmp_path):
+    # tables.load memoises inferred schemas; a table overwritten while the
+    # process lives (e.g. a regenerated corpus) must not be read with the
+    # stale schema
+    sf = str(tmp_path)
+    path = f"{sf}/region.parquet"
+    spark.createDataFrame([(0, "AFRICA")], "r_regionkey long, r_name string").write.parquet(path)
+    assert load(spark, sf, "region").columns == ["r_regionkey", "r_name"]
+    spark.createDataFrame(
+        [(0, "AFRICA", "x")], "r_regionkey long, r_name string, r_comment string"
+    ).write.mode("overwrite").parquet(path)
+    df = load(spark, sf, "region")
+    assert df.columns == ["r_regionkey", "r_name", "r_comment"]
+    assert df.collect()[0]["r_comment"] == "x"
